@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.ml.{Pipeline, PipelineModel}
+import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
 import org.apache.spark.ml.feature.{MinMaxScaler, OneHotEncoder, RobustScaler, StandardScaler, StringIndexer, VectorAssembler}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -18,6 +18,10 @@ import graft.operators.Features
   *  - one-hot: sklearn drops the FIRST (lexicographic) category, MLlib's
   *    `dropLast` drops the last index; with `stringOrderType=alphabetAsc`
   *    both leave k−1 linearly-independent indicators.
+  *
+  * The fit's own statistics are fitted eagerly and enter the plans as
+  * literals: the outlier clip's means and σs in one aggregate pass
+  * ([[clipOutliers]]), the p75 threshold in its order-statistics pass.
   */
 object FeaturePipeline {
 
@@ -26,6 +30,7 @@ object FeaturePipeline {
     "charge_per_tenure", "high_value", "support_intensity")
   val categoricalCols: Seq[String] = Seq("contract_type", "payment_method",
     "internet_service", "tenure_bucket")
+  private val clipCols: Seq[String] = Seq("tenure", "monthly_charges", "total_charges")
 
   /** `add_engineered_features` (`feature_engineering.py:57-93`): the exact
     * four derived columns, recomputed at inference like the reference does
@@ -56,16 +61,32 @@ object FeaturePipeline {
   }
 
   /** Outlier clip (`feature_engineering.py:161-176`): mean±kσ clamp on the
-    * raw numeric columns. */
-  def clipOutliers(df: DataFrame, k: Double): DataFrame =
-    Seq("tenure", "monthly_charges", "total_charges").foldLeft(df) { (d, c) =>
-      val clipped = Features.zScoreClip(d.withColumn(c, col(c).cast("double")), c, k)
-      clipped.withColumn(c, col(s"${c}_clipped")).drop(s"${c}_clipped")
-    }
+    * raw numeric columns, cast to double.
+    *
+    * CONTRACT — eager fit at call time, like the p75 threshold in
+    * [[addEngineeredFeatures]]: ONE aggregate job computes every clipped
+    * column's mean and sample σ over its finite values, and the returned
+    * plan carries them as literals in [[Features.zClipBand]] — a flat
+    * projection of the input. The lazy [[Features.zScoreClip]] per column
+    * would nest one broadcast cross-join per column under the engineered
+    * frame, re-run by every later action on it (p75, the dirty-input gate,
+    * the indexer and scaler fits, the split). */
+  def clipOutliers(df: DataFrame, k: Double): DataFrame = {
+    val cast = df.withColumns(clipCols.map(c => c -> col(c).cast("double")).toMap)
+    val stats = cast.select(clipCols.flatMap { c =>
+      val x = Features.finiteOrNull(col(c))
+      Seq(avg(x), stddev_samp(x))
+    }: _*).collect()(0)
+    cast.withColumns(clipCols.zipWithIndex.map { case (c, i) =>
+      c -> Features.zClipBand(col(c), lit(stats.get(2 * i)).cast("double"),
+        lit(stats.get(2 * i + 1)).cast("double"), k)
+    }.toMap)
+  }
 
-  /** The unfitted MLlib pipeline: StringIndexer(alphabetAsc, keep-invalid)
-    * + OneHotEncoder per categorical, numeric VectorAssembler + the
-    * config-selected scaler, final assembly [numeric..., categorical...]
+  /** The unfitted MLlib pipeline: one StringIndexer(alphabetAsc,
+    * keep-invalid) over all categoricals + a OneHotEncoder per categorical,
+    * numeric VectorAssembler + the config-selected scaler, final assembly
+    * [numeric..., categorical...]
     * mirroring the reference's ColumnTransformer order
     * (`feature_engineering.py:46-53`).
     *
@@ -76,9 +97,13 @@ object FeaturePipeline {
     * contract. The robust form centers on the median like sklearn
     * (`with_centering=True`); MLlib's default is centering OFF. */
   def buildPipeline(scalerMethod: String = "standard"): Pipeline = {
-    val indexers = categoricalCols.map(c =>
-      new StringIndexer().setInputCol(c).setOutputCol(s"${c}_idx")
-        .setStringOrderType("alphabetAsc").setHandleInvalid("keep"))
+    // ONE multi-column indexer: its alphabetical label fit gathers every
+    // column's labels in one query, and gives each column the labels (so
+    // the indices) a single-column indexer would
+    val indexer = new StringIndexer()
+      .setInputCols(categoricalCols.toArray)
+      .setOutputCols(categoricalCols.map(c => s"${c}_idx").toArray)
+      .setStringOrderType("alphabetAsc").setHandleInvalid("keep")
     val encoder = new OneHotEncoder()
       .setInputCols(categoricalCols.map(c => s"${c}_idx").toArray)
       .setOutputCols(categoricalCols.map(c => s"${c}_vec").toArray)
@@ -99,7 +124,7 @@ object FeaturePipeline {
       .setInputCols((Seq("num_scaled") ++ categoricalCols.map(c => s"${c}_vec")).toArray)
       .setOutputCol("features")
     new Pipeline().setStages(
-      (indexers :+ encoder :+ numAssembler :+ scaler :+ finalAssembler).toArray)
+      Array[PipelineStage](indexer, encoder, numAssembler, scaler, finalAssembler))
   }
 
   /** Full fit path (`build_features(fit=True)`,

@@ -38,9 +38,14 @@ import graft.operators.{Features, Metrics}
   * (combo × fold) fits run concurrently on a bounded driver pool — the
   * analog of the reference's `GridSearchCV(n_jobs=-1)` outer loop and of
   * MLlib `CrossValidator.setParallelism`. Small-data fits cannot saturate
-  * the cluster alone; concurrent job submission fills it. Results are
-  * per-(combo, fold) deterministic (fixed seeds), so concurrency cannot
-  * change scores or champion selection.
+  * the cluster alone; concurrent job submission fills it.
+  *
+  * Repeatability, measured: every estimator has a fixed seed, yet
+  * same-seed pipeline runs in one JVM do not all score alike. On 2,000
+  * rows the GBT scores repeat exactly while the random forest's F1 moves
+  * from run to run (0.1135, 0.0959, 0.0851 on data seed 11); on 20,000
+  * rows GBT moved too (F1 0.320–0.331). Scores and champion selection
+  * are therefore not guaranteed to repeat across runs.
   */
 object Training {
 
@@ -95,18 +100,23 @@ object Training {
     Metrics.binaryMetrics(pred).collect()(0).getAs[Double]("f1")
   }
 
-  /** M8 — grid search with hand-rolled stratified CV (MLlib CrossValidator
-    * folds are not stratified). Caches the fold-tagged training set once;
-    * every grid×fold fit reuses it. */
-  def gridSearch(name: String, grid: Map[String, Seq[Double]], train: DataFrame,
-                 cvFolds: Int, seed: Long,
-                 parallelism: Int = 4): (TrainedModel, Seq[CvResult]) = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+  /** Training rows tagged with stratified fold ids 0..k-1 (`fold`), and
+    * each fold's row count. */
+  final case class Folds(data: DataFrame, k: Int, sizes: Map[Int, Long]) {
+    val nTrain: Long = sizes.values.sum
+    /** Rows a fit on every fold but `f` trains on. */
+    def nFit(f: Int): Long = nTrain - sizes.getOrElse(f, 0L)
+  }
+
+  /** M7 — assign the CV folds once per training set: the reference's
+    * `GridSearchCV(cv=StratifiedKFold(...))` scores every model on the
+    * same folds, and one assignment costs one range shuffle, its
+    * checkpoints and a count, however many models train on it. */
+  def assignFolds(train: DataFrame, k: Int, seed: Long): Folds = {
     // foldAssign localCheckpoints internally (fold-id stability across the
     // many grid×fold jobs — see its scaladoc); a .cache() on top would
     // just store a second copy
-    val folded = Split.foldAssign(train.select("features", "label"), "label", cvFolds, seed)
+    val folded = Split.foldAssign(train.select("features", "label"), "label", k, seed)
     // regParam = 1/(C·n) must use the rows each fit actually sees: a fold
     // fit trains on (k-1)/k of the data, so passing the FULL count would
     // regularize fold models ~k/(k-1) harder than the sklearn C being
@@ -114,11 +124,19 @@ object Training {
     // the one selected. ONE grouped aggregation derives every count
     // (total and per-fold complement) instead of k+1 sequential
     // full-scan count jobs before the pool even starts.
-    val foldSizes: Map[Int, Long] = folded.groupBy(col("fold")).count()
+    val sizes = folded.groupBy(col("fold")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val nTrain = foldSizes.values.sum
-    val nPerFold: Map[Int, Long] = (0 until cvFolds).map(f =>
-      f -> (nTrain - foldSizes.getOrElse(f, 0L))).toMap
+    Folds(folded, k, sizes)
+  }
+
+  /** M8 — grid search with hand-rolled stratified CV (MLlib CrossValidator
+    * folds are not stratified) over folds from [[assignFolds]]: every
+    * grid×fold fit reuses the one checkpointed fold-tagged set. */
+  def gridSearch(name: String, grid: Map[String, Seq[Double]], folds: Folds,
+                 parallelism: Int = 4): (TrainedModel, Seq[CvResult]) = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val Folds(folded, cvFolds, _) = folds
     val combos = gridCombos(grid)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(parallelism, combos.size * cvFolds)))
@@ -126,7 +144,7 @@ object Training {
     val results =
       try {
         val futures = for (params <- combos; f <- 0 until cvFolds) yield Future {
-          val fit = build(name, params, nPerFold(f))
+          val fit = build(name, params, folds.nFit(f))
             .fit(folded.filter(col("fold") =!= f))
             .asInstanceOf[Model[_]]
           (params, f) -> f1Score(fit, folded.filter(col("fold") === f))
@@ -141,7 +159,7 @@ object Training {
     // maxBy on params.hashCode was arbitrary and JVM-version-fragile.
     val best = results.zipWithIndex
       .maxBy { case (r, i) => (r.meanScore, -i) }._1
-    val refit = build(name, best.params, nTrain).fit(folded).asInstanceOf[Model[_]]
+    val refit = build(name, best.params, folds.nTrain).fit(folded).asInstanceOf[Model[_]]
     // checkpoint blocks are reference-tracked by the ContextCleaner — no
     // explicit unpersist (and none would be safe while `refit` users can
     // still re-trigger fold reads)
@@ -150,14 +168,16 @@ object Training {
 
   /** M13 — enabled-model loop (`training.py:98-150`) keeping the full
     * per-combo CV evidence; MLflow tracking is replaced by the JSON run
-    * log written in [[RunPipeline.writeTrainingRunLog]]. */
+    * log written in [[RunPipeline.writeTrainingRunLog]]. The folds are
+    * assigned once and shared by every enabled model. */
   def trainAllDetailed(config: PipelineConfig,
-                       train: DataFrame): Seq[(TrainedModel, Seq[CvResult])] =
+                       train: DataFrame): Seq[(TrainedModel, Seq[CvResult])] = {
+    lazy val folds = assignFolds(train, config.cvFolds, config.randomState)
     config.models.toSeq.sortBy(_._1).collect {
       case (name, mc) if mc.enabled =>
-        gridSearch(name, mc.grid, train, config.cvFolds, config.randomState,
-          config.gridParallelism)
+        gridSearch(name, mc.grid, folds, config.gridParallelism)
     }
+  }
 
   def trainAll(config: PipelineConfig, train: DataFrame): Seq[TrainedModel] =
     trainAllDetailed(config, train).map(_._1)

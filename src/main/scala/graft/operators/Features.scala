@@ -70,17 +70,22 @@ object Features {
     val stats = df.agg(avg(finiteOrNull(col(c))).as("__zc_m"),
       stddev_samp(finiteOrNull(col(c))).as("__zc_sd"))
     df.crossJoin(broadcast(stats))
-      .withColumn(s"${c}_clipped",
-        // NULL and NaN can't be meaningfully clipped into the band —
-        // NULL out, explicitly: least/greatest SKIP null arguments and
-        // order NaN greatest, so without the guard a NULL row silently
-        // becomes the UPPER bound in Spark (and the LOWER one in DuckDB)
-        when(col(c).isNull || isnan(col(c)), lit(null))
-          .otherwise(when(col("__zc_sd").isNull || col("__zc_sd") === 0.0, col(c))
-            .otherwise(greatest(least(col(c), col("__zc_m") + col("__zc_sd") * z),
-                                col("__zc_m") - col("__zc_sd") * z))))
+      .withColumn(s"${c}_clipped", zClipBand(col(c), col("__zc_m"), col("__zc_sd"), z))
       .drop("__zc_m", "__zc_sd")
   }
+
+  /** The F5 clip rule, one definition for [[zScoreClip]] (statistics as
+    * columns of a joined 1-row aggregate) and fit-time clips (statistics
+    * as literals): NULL/NaN → NULL; σ NULL or 0 → `x` unchanged; else
+    * `greatest(least(x, m + zσ), m − zσ)`. ±Inf lands on the band edge. */
+  def zClipBand(x: Column, m: Column, sd: Column, z: Double): Column =
+    // NULL and NaN can't be meaningfully clipped into the band —
+    // NULL out, explicitly: least/greatest SKIP null arguments and
+    // order NaN greatest, so without the guard a NULL row silently
+    // becomes the UPPER bound in Spark (and the LOWER one in DuckDB)
+    when(x.isNull || isnan(x), lit(null))
+      .otherwise(when(sd.isNull || sd === 0.0, x)
+        .otherwise(greatest(least(x, m + sd * z), m - sd * z)))
 
   /** F8 — sigmoid (ref `data_ingestion.py:87`, label model
     * `1/(1+exp(-logit))`). */

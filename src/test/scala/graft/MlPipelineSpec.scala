@@ -89,6 +89,37 @@ class MlPipelineSpec extends AnyFunSuite {
       (col("monthly_charges") > p75).cast("int") =!= col("high_value")).count()
     assert(mismatches == 0L)
     assert(feat.filter(col("high_value").isin(0, 1)).count() == df.count())
+    // the other literal fit, the outlier clip: its one-pass literal bands
+    // vs the lazy per-column zScoreClip chain, bit for bit, on clean rows,
+    // on NULL/NaN/±Inf in a clipped column, and on a constant (σ = 0) and
+    // an all-NULL clipped column
+    val clipped = Seq("tenure", "monthly_charges", "total_charges")
+    def chained(d: org.apache.spark.sql.DataFrame) = clipped.foldLeft(d) { (acc, c) =>
+      graft.operators.Features.zScoreClip(acc.withColumn(c, col(c).cast("double")), c, 3.0)
+        .withColumn(c, col(s"${c}_clipped")).drop(s"${c}_clipped")
+    }
+    val t7 = col("tenure") % 7
+    val variants = Seq(
+      "clean" -> df,
+      "non-finite" -> df.withColumn("total_charges",
+        when(t7 === 0, lit(Double.NaN)).when(t7 === 1, lit(Double.PositiveInfinity))
+          .when(t7 === 2, lit(Double.NegativeInfinity)).when(t7 === 3, lit(null))
+          .otherwise(col("total_charges"))),
+      "constant + all-NULL" -> df.withColumn("tenure", lit(12))
+        .withColumn("monthly_charges", lit(null).cast("double")))
+    for ((name, v) <- variants) {
+      val in = v.withColumn("__id", monotonically_increasing_id())
+      def bits(d: org.apache.spark.sql.DataFrame) =
+        d.select((col("__id") +: clipped.map(col)): _*).collect().map(r =>
+          r.getLong(0) -> (1 to clipped.size).map(i =>
+            if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(i)))))
+          .toMap
+      val (one, ref) = (FeaturePipeline.clipOutliers(in, 3.0), chained(in))
+      assert(one.columns.toSeq == ref.columns.toSeq, name)
+      val (got, want) = (bits(one), bits(ref))
+      assert(got == want, s"$name: ${got.count { case (id, v) => !want.get(id).contains(v) }} " +
+        s"of ${want.size} rows differ from the zScoreClip chain")
+    }
   }
 
   test("stratified split: per-stratum fraction preserved") {
@@ -237,6 +268,27 @@ class MlPipelineSpec extends AnyFunSuite {
     val s1 = Deployment.score(probe, model, pre).select("prediction", "p1").collect()
     assert(s1.forall(r => Set(0.0, 1.0).contains(r.getDouble(0))))
     assert(s1.forall(r => r.getDouble(1) >= 0.0 && r.getDouble(1) <= 1.0))
+    // the preprocessor's one multi-column indexer equals four single-column
+    // indexers fitted on the same rows: same features, same scores, also
+    // for an unseen and a NULL category (the keep bucket)
+    import org.apache.spark.ml.feature.{StringIndexer, StringIndexerModel}
+    val indexer = pre.stages.head.asInstanceOf[StringIndexerModel]
+    assert(indexer.getInputCols.toSeq == FeaturePipeline.categoricalCols)
+    val engineered = FeaturePipeline.addEngineeredFeatures(FeaturePipeline.clipOutliers(
+      DataGen.generate(spark, config.nSamples, config.randomState), config.outlierClipSigma))
+    val perColumn = new org.apache.spark.ml.Pipeline().setStages(
+      FeaturePipeline.categoricalCols.map(c => new StringIndexer().setInputCol(c)
+        .setOutputCol(s"${c}_idx").setStringOrderType("alphabetAsc")
+        .setHandleInvalid("keep")).toArray ++ pre.stages.tail).fit(engineered)
+    val unseen = probe.withColumn("contract_type",
+      when(col("tenure") % 3 === 0, lit("three-year"))
+        .when(col("tenure") % 3 === 1, lit(null)).otherwise(col("contract_type")))
+    def vecs(m: org.apache.spark.ml.PipelineModel) = m.transform(
+      FeaturePipeline.addEngineeredFeatures(unseen)).select("features").collect().map(_.get(0))
+    assert(vecs(pre).toSeq == vecs(perColumn).toSeq)
+    def scores(m: org.apache.spark.ml.PipelineModel) =
+      Deployment.score(unseen, model, m).select("prediction", "p1").collect().toSeq
+    assert(scores(pre) == scores(perColumn))
     // re-promotion archives exactly one prior champion (test_deployment.py:40-61)
     val before = Deployment.archiveCount(config.modelDir)
     Deployment.promote(config.modelDir, model, pre,

@@ -331,4 +331,21 @@ class PlanLintSpec extends AnyFunSuite {
     // under WITH RECURSIVE is not a self-reference
     assert(SparkEntry.withCanon("SELECT 1").contains("FROM main.region"))
   }
+
+  test("FeaturePipeline.fit output is a flat projection: no join, no broadcast exchange") {
+    // the fitted statistics (clip bands, p75) enter as literals; a lazy
+    // 1-row-aggregate cross-join here would be re-planned and re-run by
+    // every action on the frame (the p75 fit, the dirty-input gate, the
+    // indexer and scaler fits, the split's pinned draw)
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    val (feat, _) = graft.ml.FeaturePipeline.fit(graft.ml.DataGen.generate(spark, 300, 5L))
+    val qe = feat.queryExecution
+    assert(qe.optimizedPlan.collect { case j: Join => j }.isEmpty, qe.optimizedPlan.treeString)
+    // the helper walks into the adaptive plan's (not yet executed) stages
+    val broadcasts = new AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(qe.executedPlan) { case b: BroadcastExchangeLike => b }
+    assert(broadcasts.isEmpty, qe.executedPlan.treeString)
+  }
 }
